@@ -101,3 +101,23 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register each table as a temp view so spark.sql can reference it."""
     for t in TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-local ``rows`` as a JVM-local relation (``LocalTableScan``).
+
+    ``spark.createDataFrame(list)`` plans a ``parallelize`` plus an
+    identity ``map`` in Python, so every action on the frame runs
+    Python-worker tasks. An Arrow table crosses py4j once and plans to a
+    ``LocalTableScan``. ``schema`` is a DDL string of atomic types; pass
+    instants as epoch micros and convert them in the engine
+    (``F.timestamp_micros``), which keeps the host's timezone out of
+    the values."""
+    import pyarrow as pa
+    from pyspark.sql.types import DataType
+
+    names = [f.name for f in DataType.fromDDL(schema).fields]
+    cols = list(zip(*rows)) or [()] * len(names)
+    return spark.createDataFrame(
+        pa.table({n: list(c) for n, c in zip(names, cols)}), schema
+    )

@@ -8,16 +8,27 @@ contracts (SURVEY.md §2.7):
 | stg   | stg_metar_observations (stg/stg_metar_observations.sql) | strict ``>`` (L1) | merge by id (L4) |
 | ods   | ods_metar_latest (ods/ods_metar_latest.sql)             | inclusive ``>=`` (L2) | append (L5) |
 | int   | int_metar_latest (int/int_metar_latest.sql)             | strict ``>`` (L1) | merge by icao (L4) |
-| dwh   | dw_daily_airport_metrics (dwh/dw_daily_airport_metrics.sql) | inclusive ``>=`` on date (L2) | merge by icao_date |
+| dwh   | dw_daily_airport_metrics (dwh/dw_daily_airport_metrics.sql) | inclusive ``>=`` on date (L2) | overwrite of the days ≥ watermark (≡ merge by icao_date) |
 
 Dependency order stg → {ods, int} → dwh mirrors the dbt ref() DAG
 (SURVEY.md §3.3); unlike dbt+Postgres each stage is one distributed
 plan, and the whole chain shares a session.
 
-Layout for scale: every layer is parquet under ``base_dir/<layer>``;
-dwh is partitioned by ``observed_date`` so downstream reads partition-
-prune, and the merge rewrite is bounded to touched partitions via
-upsert_parquet's partition_cols.
+Layout: every layer is parquet under ``base_dir/<layer>`` beside its
+``_layer.json`` (``sources.merge``): the layer's schema and high
+watermark, written with its data. Each stage reads its input with the
+stored schema and filters on its own stored watermark, so a warm cycle
+runs no schema-inference job and no max scan over a target.
+
+- stg and int merge through ``upsert_parquet``'s staging swap, which
+  rewrites the whole (small) table and its metadata together.
+- ods appends only the fresh rows.
+- dwh is partitioned by ``observed_date``: downstream reads
+  partition-prune, and each cycle overwrites only the days at or after
+  its watermark, recomputed from ods; it never reads dwh. That equals
+  the reference's merge by icao_date: ods only grows, so a recomputed
+  day's ``n_observations`` is never below the stored one and the
+  recomputed row would win the merge anyway.
 """
 
 from __future__ import annotations
@@ -27,10 +38,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metar_pipeline_spark.operators.aggregates import daily_rollup
-from metar_pipeline_spark.operators.incremental import high_watermark_filter
+from metar_pipeline_spark.io import local_frame
 from metar_pipeline_spark.operators.windows import latest_per_key_maxby
-from metar_pipeline_spark.sources.merge import upsert_parquet
+from metar_pipeline_spark.sources.merge import (
+    append_layer,
+    layer_meta,
+    overwrite_layer_partitions,
+    read_layer,
+    upsert_parquet,
+    watermark_filter,
+)
 
 
 def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
@@ -38,6 +55,13 @@ def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return spark.read.parquet(path) if fs.exists(hpath) else None
+
+
+def _watermark(spark: SparkSession, path: str) -> int | None:
+    """The stored high watermark of the layer at ``path``; None before
+    its first run."""
+    meta = layer_meta(spark, path)
+    return meta.watermark if meta else None
 
 
 def stg_stage(
@@ -75,9 +99,8 @@ def stg_stage(
     from pyspark.sql import Observation
 
     path = os.path.join(base_dir, "stg")
-    existing = _read_if_exists(spark, path)
-    fresh = high_watermark_filter(
-        normalized, existing, "observed", inclusive=False
+    fresh = watermark_filter(
+        normalized, "observed", _watermark(spark, path), inclusive=False
     )
     if anomaly_guard is not None:
         g = dict(anomaly_guard)
@@ -160,8 +183,10 @@ def stg_stage(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col("observed").isNull().cast("int")).alias("null_observed"),
         F.sum(F.col("icao").isNull().cast("int")).alias("null_icao"),
-        F.min("observed").alias("min_observed"),
-        F.max("observed").alias("max_observed"),
+        # instants as epoch micros: a collected TimestampType goes
+        # through the host's local timezone
+        F.unix_micros(F.min("observed")).alias("min_observed_us"),
+        F.unix_micros(F.max("observed")).alias("max_observed_us"),
         # Engine-derived watermark epoch (round-9 ADVICE): the run id
         # must not depend on the driver's timezone, and a collected
         # TimestampType converts through PySpark's LOCAL-tz
@@ -170,7 +195,10 @@ def stg_stage(
         # function of the data.
         F.unix_timestamp(F.max("observed")).alias("max_observed_epoch"),
     )
-    upsert_parquet(spark, fresh, path, keys=["id"], order_col="inserted_at")
+    upsert_parquet(
+        spark, fresh, path, keys=["id"], order_col="inserted_at",
+        watermark_col="observed",
+    )
     _append_batch_metrics(spark, base_dir, "stg", obs.get)
     # elementary.schema_changes twin: snapshot this batch's (column,
     # type) schema beside the profile metrics; schema_drift.detect_drift
@@ -215,96 +243,78 @@ def _append_batch_metrics(
     spark: SparkSession, base_dir: str, layer: str, metrics: dict
 ) -> None:
     """Append one profile row per (layer, batch) to the metrics table."""
-    row = {
-        "layer": layer,
-        "batch_ts": None,  # filled by current_timestamp below
-        **{k: metrics.get(k) for k in sorted(metrics)},
-    }
-    df = (
-        spark.createDataFrame(
-            [tuple(v for k, v in row.items() if k != "batch_ts")],
-            schema=", ".join(
-                [
-                    "layer string",
-                    "max_observed timestamp",
-                    "max_observed_epoch long",
-                    "min_observed timestamp",
-                    "n_rows long",
-                    "null_icao long",
-                    "null_observed long",
-                ]
-            ),
-        )
-        .withColumn("batch_ts", F.current_timestamp())
+    _batch_metrics_row(spark, layer, metrics).write.mode("append").parquet(
+        os.path.join(base_dir, "_metrics")
     )
-    df.write.mode("append").parquet(os.path.join(base_dir, "_metrics"))
+
+
+def _batch_metrics_row(spark: SparkSession, layer: str, metrics: dict) -> DataFrame:
+    """The ``_metrics`` row of one batch, from its observe metrics."""
+    row = local_frame(
+        spark,
+        [(layer, metrics["max_observed_us"], metrics["max_observed_epoch"],
+          metrics["min_observed_us"], metrics["n_rows"],
+          metrics["null_icao"], metrics["null_observed"])],
+        "layer string, max_observed_us long, max_observed_epoch long, "
+        "min_observed_us long, n_rows long, null_icao long, "
+        "null_observed long",
+    )
+    return row.select(
+        "layer",
+        F.timestamp_micros("max_observed_us").alias("max_observed"),
+        "max_observed_epoch",
+        F.timestamp_micros("min_observed_us").alias("min_observed"),
+        "n_rows",
+        "null_icao",
+        "null_observed",
+        F.current_timestamp().alias("batch_ts"),
+    )
 
 
 def ods_stage(spark: SparkSession, base_dir: str) -> None:
     """ods: digits-only id sanitization (ods_metar_latest.sql:13-23),
     star-except-id projection, inclusive watermark, append."""
-    stg = spark.read.parquet(os.path.join(base_dir, "stg"))
+    stg = read_layer(spark, os.path.join(base_dir, "stg"))
     path = os.path.join(base_dir, "ods")
-    existing = _read_if_exists(spark, path)
+    wm = _watermark(spark, path)
     is_num = F.col("id").rlike("^[0-9]+$")
     sanitized = (
         stg.filter(is_num)
         .withColumn("id_int", F.col("id").cast("int"))
         .drop("id")
     )
-    fresh = high_watermark_filter(
-        sanitized, existing, "observed", inclusive=True
-    )
-    out = (
-        existing.unionByName(fresh, allowMissingColumns=True)
-        if existing is not None
-        else fresh
-    )
-    staging_write(spark, out, path)
-
-
-def staging_write(spark: SparkSession, df: DataFrame, path: str, partition_cols=None) -> None:
-    """Atomic full rewrite via staging + rename (append-safe because the
-    union already contains the existing rows)."""
-    staging = path.rstrip("/") + ".__staging__"
-    w = df.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(staging)
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    spath = jvm.org.apache.hadoop.fs.Path(staging)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
-    fs.rename(spath, hpath)
+    fresh = watermark_filter(sanitized, "observed", wm, inclusive=True)
+    append_layer(spark, fresh, path, "observed", wm)
 
 
 def int_stage(spark: SparkSession, base_dir: str) -> None:
     """int: latest observation per icao (int_metar_latest.sql:9-17),
     strict watermark, merge by icao."""
-    stg = spark.read.parquet(os.path.join(base_dir, "stg"))
+    stg = read_layer(spark, os.path.join(base_dir, "stg"))
     path = os.path.join(base_dir, "int")
-    existing = _read_if_exists(spark, path)
-    fresh = high_watermark_filter(stg, existing, "observed", inclusive=False)
+    fresh = watermark_filter(
+        stg, "observed", _watermark(spark, path), inclusive=False
+    )
     latest = latest_per_key_maxby(fresh, ["icao"], "observed", tiebreak="id")
-    upsert_parquet(spark, latest, path, keys=["icao"], order_col="observed")
+    upsert_parquet(
+        spark, latest, path, keys=["icao"], order_col="observed",
+        watermark_col="observed",
+    )
 
 
 def dwh_stage(spark: SparkSession, base_dir: str) -> None:
     """dwh: daily per-airport mart with surrogate key
-    (dw_daily_airport_metrics.sql:7-29), inclusive date watermark, merge
-    by icao_date; output partitioned by observed_date."""
-    ods = spark.read.parquet(os.path.join(base_dir, "ods"))
+    (dw_daily_airport_metrics.sql:7-29), inclusive date watermark;
+    the days at or after it are recomputed from ods and overwrite their
+    ``observed_date`` partitions (≡ merge by icao_date, module
+    docstring)."""
+    ods = read_layer(spark, os.path.join(base_dir, "ods"))
     path = os.path.join(base_dir, "dwh")
-    existing = _read_if_exists(spark, path)
+    wm = _watermark(spark, path)
     with_date = ods.withColumn(
         "observed_date", F.to_date(F.date_trunc("day", F.col("observed")))
     )
-    if existing is not None:
-        wm = existing.agg(F.max("observed_date")).first()[0]
-        if wm is not None:
-            with_date = with_date.filter(F.col("observed_date") >= F.lit(wm))
+    with_date = watermark_filter(with_date, "observed_date", wm, inclusive=True)
     mart = (
         with_date.groupBy("icao", "observed_date")
         .agg(
@@ -326,13 +336,8 @@ def dwh_stage(spark: SparkSession, base_dir: str) -> None:
             ),
         )
     )
-    upsert_parquet(
-        spark,
-        mart,
-        path,
-        keys=["icao_date"],
-        order_col="n_observations",
-        partition_cols=["observed_date"],
+    overwrite_layer_partitions(
+        spark, mart, path, ["observed_date"], "observed_date", wm
     )
 
 
@@ -352,6 +357,6 @@ def run_medallion(
     int_stage(spark, base_dir)
     dwh_stage(spark, base_dir)
     return {
-        layer: spark.read.parquet(os.path.join(base_dir, layer))
+        layer: read_layer(spark, os.path.join(base_dir, layer))
         for layer in ("stg", "ods", "int", "dwh")
     }

@@ -30,20 +30,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from metar_pipeline_spark.io import local_frame
+
 
 def snapshot_schema(df: DataFrame) -> DataFrame:
     """(column_name, data_type, ordinal) — one row per top-level column.
 
     ``data_type`` is the Spark ``simpleString`` (``bigint``,
     ``double``, ``string``, ``timestamp``, ``array<float>``, ...): the
-    canonical vocabulary drift comparisons key on."""
-    spark = df.sparkSession
+    canonical vocabulary drift comparisons key on. The rows are a
+    JVM-local relation (``io.local_frame``): no Python worker runs."""
     rows = [
         (f.name, f.dataType.simpleString(), i)
         for i, f in enumerate(df.schema.fields)
     ]
-    return spark.createDataFrame(
-        rows, "column_name string, data_type string, ordinal int"
+    return local_frame(
+        df.sparkSession, rows,
+        "column_name string, data_type string, ordinal int",
     )
 
 

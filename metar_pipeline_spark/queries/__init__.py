@@ -119,6 +119,10 @@ VERIFY_FIRST: list[str] = [
     "filelog_cdf_ivm_view",
     "filelog_branch_publish",
     "filelog_restore_rollback",
+    # tpch_q3 rounds its revenue in DECIMAL before the cast to double
+    # (core._dsum_round, both sides): rounding the double put exact
+    # half-cents on different sides in Spark and DuckDB.
+    "tpch_q3_shipping_priority",
     # (ann_maxsim_recall_at_10 was named by the r13 verdict but its
     # verified-surface hash is UNCHANGED since its green verdict — the
     # stale-boost lint correctly excludes it from manual boosting.)

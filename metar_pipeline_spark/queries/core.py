@@ -31,6 +31,15 @@ def _dsum(col, dec=DEC10):
     return F.sum(col.cast(dec)).cast("double")
 
 
+def _dsum_round(col, scale: int, dec=DEC10):
+    """Order-independent SUM rounded to ``scale`` places: the exact
+    decimal sum is rounded half-up, then cast to double. Rounding the
+    double instead goes wrong at exact halves (1.005 is 1.00499… as a
+    double): Spark rounds it up and DuckDB down. The oracle spelling is
+    ``CAST(round(SUM(CAST(x AS DECIMAL(30,10))), scale) AS DOUBLE)``."""
+    return F.round(F.sum(col.cast(dec)), scale).cast("double")
+
+
 # ---------------------------------------------------------------------------
 # dwh daily rollup — A1 + P11 + P12
 # (/root/reference/dbt/models/dwh/dw_daily_airport_metrics.sql:7-29)
@@ -432,7 +441,7 @@ def tpch_q1_pricing_summary(spark, sf_dir):
     "tpch_q3_shipping_priority",
     """
     SELECT o.o_orderkey, o.o_orderdate, o.o_orderpriority,
-           round(CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(30,10))) AS DOUBLE), 2) AS revenue
+           CAST(round(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(30,10))), 2) AS DOUBLE) AS revenue
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -461,8 +470,8 @@ def tpch_q3_shipping_priority(spark, sf_dir):
     return (
         joined.groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
-            F.round(
-                _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+            _dsum_round(
+                F.col("l_extendedprice") * (1 - F.col("l_discount")), 2
             ).alias("revenue")
         )
         .orderBy(F.desc("revenue"), F.asc("o_orderkey"))

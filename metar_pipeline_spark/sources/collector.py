@@ -31,6 +31,7 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from metar_pipeline_spark.io import local_frame
 from metar_pipeline_spark.schemas import (
     METAR_NESTED_SCHEMA,
     RUS_TOP20_ICAO,
@@ -48,8 +49,10 @@ def raw_to_bronze(spark: SparkSession, raw_docs: list[str]) -> DataFrame:
     inserted_at) ≡ public.metar_raw_json
     (/root/reference/src/etl/mongo_to_postgres.py:58-64). The id is a
     content hash of the payload (the reference uses the Mongo ObjectId;
-    a content address is deterministic and replay-safe)."""
-    df = spark.createDataFrame([(d,) for d in raw_docs], "payload string")
+    a content address is deterministic and replay-safe). The documents
+    enter the engine as a JVM-local relation (``io.local_frame``), so
+    no Python worker runs per batch."""
+    df = local_frame(spark, [(d,) for d in raw_docs], "payload string")
     return df.select(
         F.md5("payload").alias("id"),
         "payload",

@@ -22,7 +22,12 @@ import re
 
 from pyspark.sql import SparkSession
 
-from metar_pipeline_spark.sources.merge import _hadoop_fs
+from metar_pipeline_spark.sources.merge import (
+    LAYER_META,
+    _hadoop_fs,
+    _read_small_file,
+    _write_small_file,
+)
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
@@ -73,8 +78,14 @@ def compact_parquet_dir(
     staging = path.rstrip("/") + ".__compact__"
     df.repartition(n_target).write.mode("overwrite").parquet(staging)
 
-    fs, tpath, _ = _hadoop_fs(spark, path)
+    fs, tpath, jvm = _hadoop_fs(spark, path)
     _, spath, _ = _hadoop_fs(spark, staging)
+    # the table's metadata (merge.LAYER_META) moves with the rows:
+    # compaction changes neither its schema nor its watermark
+    _, meta, _ = _hadoop_fs(spark, f"{path.rstrip('/')}/{LAYER_META}")
+    if fs.exists(meta):
+        _, smeta, _ = _hadoop_fs(spark, f"{staging}/{LAYER_META}")
+        _write_small_file(fs, smeta, _read_small_file(fs, meta, jvm))
     fs.delete(tpath, True)
     fs.rename(spath, tpath)
     new_n, _ = dir_stats(spark, path)

@@ -1,4 +1,5 @@
-"""Upsert (MERGE) sink on plain parquet — S5/L4 without Delta.
+"""Upsert (MERGE) sink on plain parquet — S5/L4 without Delta — and the
+metadata each table it writes carries.
 
 The reference upserts with ``INSERT ... ON CONFLICT (id) DO UPDATE SET
 payload = EXCLUDED.payload, inserted_at = now()``
@@ -13,17 +14,53 @@ MATCHED INSERT``. This module is the pure-parquet fallback: read target,
 max_by-style aggregate, rewrite via staging-dir + atomic rename (a
 parquet path cannot be read and overwritten in the same job).
 
-Scale note: the fallback rewrites the whole table and is only correct
+Layer metadata: every table written here holds ``_layer.json`` beside
+its data, with the table's schema JSON and the high watermark of one
+column (epoch micros for a timestamp, days since epoch for a date) — a
+dbt model's ``MAX(observed)`` over its own target, kept next to the
+output the way Structured Streaming keeps its progress next to its sink.
+Readers take the schema from it (no inference job) and filter on the
+stored watermark (no max scan over the target). The watermark is
+computed by an ``Observation`` on the write's own scan. A table
+directory without the file raises: a table that lost its metadata is
+never taken for a first run. Spark's listing skips ``_``-prefixed files,
+so plain ``spark.read.parquet`` readers see the data unchanged.
+
+Three ways to write such a table, one per medallion materialization:
+
+- :func:`upsert_parquet` — merge by key, whole-table rewrite into
+  ``<path>.__staging__`` with ``_layer.json`` written there too, then one
+  swap: data and metadata change together. A swap that crashed after
+  deleting the old table is finished by the next reader
+  (:func:`layer_meta`) when the staging directory holds a complete write.
+- :func:`append_layer` — new files only; metadata rewritten after.
+- :func:`overwrite_layer_partitions` — dynamic partition overwrite of the
+  partitions present in the frame; metadata rewritten after.
+
+For the last two a crash between data and metadata leaves the older
+watermark: the next run re-reads from it. A partition overwrite repeats
+the same partitions (idempotent); an inclusive append re-appends the rows
+since the older watermark, as a rerun of the same batch would.
+
+Scale note: the merge rewrites the whole table and is only correct
 single-writer; at 100 TB you partition the target (e.g. by day) and
-rewrite only the partitions present in the batch — `upsert_parquet`
-takes ``partition_cols`` for exactly that — or use a format with ACID
-MERGE. The join/dedup shape is identical in all three.
+rewrite only the partitions present in the batch — what
+:func:`overwrite_layer_partitions` does for tables whose recomputed
+partitions supersede the stored ones — or use a format with ACID MERGE
+(:mod:`sources.filelog`). The join/dedup shape is identical in all three.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import json
+from dataclasses import dataclass
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, StructType, TimestampType
+
+LAYER_META = "_layer.json"
+_STAGING = ".__staging__"
 
 
 def merge_last_writer_wins(
@@ -61,20 +98,206 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, hpath, jvm
 
 
+def _read_small_file(fs, path_obj, jvm) -> str:
+    stream = fs.open(path_obj)
+    try:
+        baos = jvm.java.io.ByteArrayOutputStream()
+        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 4096, False)
+        return bytes(baos.toByteArray()).decode("utf-8")
+    finally:
+        stream.close()
+
+
+def _write_small_file(fs, path_obj, data: str) -> None:
+    out = fs.create(path_obj, True)
+    try:
+        out.write(bytearray(data.encode("utf-8")))
+    finally:
+        out.close()
+
+
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise OSError(f"rename {src} -> {dst} failed")
+
+
+# -- layer metadata -----------------------------------------------------
+
+
+@dataclass(frozen=True)
+class LayerMeta:
+    """What ``_layer.json`` holds: the schema a reader passes to
+    ``spark.read.schema`` and the high watermark (None when the table
+    has no non-null value in its watermark column, or none is kept)."""
+
+    schema: StructType
+    watermark: int | None
+
+
+def layer_meta(spark: SparkSession, path: str) -> LayerMeta | None:
+    """The metadata of the table at ``path``; None when no table exists
+    yet (the L3 first run).
+
+    A missing table whose ``<path>.__staging__`` holds a complete write
+    (``_SUCCESS`` plus ``_layer.json``) is a swap that crashed between
+    its delete and its rename: the staging directory is renamed into
+    place first. A missing table beside any other staging leftover, and
+    a table without ``_layer.json``, raise."""
+    fs, tpath, jvm = _hadoop_fs(spark, path)
+    if not fs.exists(tpath):
+        staging = path.rstrip("/") + _STAGING
+        _, spath, _ = _hadoop_fs(spark, staging)
+        if not fs.exists(spath):
+            return None
+        if not is_complete_write(spark, fs, staging):
+            raise RuntimeError(
+                f"{path} is missing and {staging} holds an incomplete "
+                "write; remove the staging directory to start over"
+            )
+        _rename(fs, spath, tpath)
+    _, mpath, _ = _hadoop_fs(spark, f"{path.rstrip('/')}/{LAYER_META}")
+    if not fs.exists(mpath):
+        raise FileNotFoundError(
+            f"{path} has no {LAYER_META}: its schema and watermark are lost"
+        )
+    meta = json.loads(_read_small_file(fs, mpath, jvm))
+    return LayerMeta(StructType.fromJson(meta["schema"]), meta["watermark"])
+
+
+def is_complete_write(spark: SparkSession, fs, staging: str) -> bool:
+    """True iff the staging directory of a swap holds a finished write:
+    ``_SUCCESS`` plus ``_layer.json``."""
+    return all(
+        fs.exists(_hadoop_fs(spark, f"{staging}/{name}")[1])
+        for name in ("_SUCCESS", LAYER_META)
+    )
+
+
+def _write_layer_meta(
+    spark: SparkSession, path: str, schema: StructType, watermark: int | None
+) -> None:
+    """Write ``_layer.json`` into the directory ``path``."""
+    fs, mpath, _ = _hadoop_fs(spark, f"{path.rstrip('/')}/{LAYER_META}")
+    _write_small_file(
+        fs, mpath, json.dumps({"schema": schema.jsonValue(),
+                               "watermark": watermark})
+    )
+
+
+def read_layer(
+    spark: SparkSession, path: str, meta: LayerMeta | None = None
+) -> DataFrame:
+    """Scan the table at ``path`` with its stored schema (no inference
+    job); raises when there is no table."""
+    meta = meta or layer_meta(spark, path)
+    if meta is None:
+        raise FileNotFoundError(f"no table at {path}")
+    return spark.read.schema(meta.schema).parquet(path)
+
+
+def _watermark_bound(df: DataFrame, col: str, watermark: int):
+    if isinstance(df.schema[col].dataType, DateType):
+        return F.date_from_unix_date(F.lit(watermark))
+    return F.timestamp_micros(F.lit(watermark))
+
+
+def watermark_filter(
+    df: DataFrame, col: str, watermark: int | None, inclusive: bool
+) -> DataFrame:
+    """Rows of ``df`` past a stored watermark: strict ``>`` (L1) or
+    inclusive ``>=`` (L2); all rows when there is none (L3). Rows whose
+    ``col`` is null never pass a watermark, as in
+    ``operators.incremental.high_watermark_filter``."""
+    if watermark is None:
+        return df
+    bound = _watermark_bound(df, col, watermark)
+    return df.filter(F.col(col) >= bound if inclusive else F.col(col) > bound)
+
+
+def _observed_write(df: DataFrame, col: str | None, write) -> int | None:
+    """Run ``write(frame)`` on ``df`` with an Observation of ``col``'s
+    high watermark riding the write's own scan; return that watermark."""
+    if col is None:
+        write(df)
+        return None
+    dtype = df.schema[col].dataType
+    if isinstance(dtype, DateType):
+        wm = F.unix_date(F.max(col))
+    elif isinstance(dtype, TimestampType):
+        wm = F.unix_micros(F.max(col))
+    else:
+        raise TypeError(f"watermark column {col} is {dtype.simpleString()}")
+    obs = Observation()
+    write(df.observe(obs, wm.alias("wm")))
+    return obs.get["wm"]
+
+
+def _max_or_none(*vals):
+    vals = [v for v in vals if v is not None]
+    return max(vals) if vals else None
+
+
+def append_layer(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    watermark_col: str,
+    watermark: int | None,
+) -> None:
+    """Append ``df`` to the table at ``path`` (L5), whose stored
+    watermark is ``watermark``, and store the advanced one."""
+    wm = _observed_write(
+        df, watermark_col, lambda d: d.write.mode("append").parquet(path)
+    )
+    wm = _max_or_none(watermark, wm)
+    _write_layer_meta(spark, path, df.schema, wm)
+
+
+def overwrite_layer_partitions(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    partition_cols: list[str],
+    watermark_col: str,
+    watermark: int | None,
+) -> None:
+    """Replace the partitions of the table at ``path`` that ``df`` holds
+    (dynamic partition overwrite) and keep every other one; right for a
+    table whose recomputed partitions supersede the stored ones.
+    ``watermark`` is the table's stored one; the advanced one is
+    stored."""
+    wm = _observed_write(
+        df,
+        watermark_col,
+        lambda d: d.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path),
+    )
+    wm = _max_or_none(watermark, wm)
+    # a read returns the partition columns last
+    data = [f for f in df.schema.fields if f.name not in partition_cols]
+    schema = StructType(data + [df.schema[c] for c in partition_cols])
+    _write_layer_meta(spark, path, schema, wm)
+
+
 def upsert_parquet(
     spark: SparkSession,
     batch: DataFrame,
     target_path: str,
     keys: list[str],
     order_col: str,
-    partition_cols: list[str] | None = None,
     manifest_cols: list[str] | None = None,
     manifest_path: str | None = None,
+    watermark_col: str | None = None,
 ) -> None:
-    """MERGE ``batch`` into the parquet table at ``target_path``.
+    """MERGE ``batch`` into the parquet table at ``target_path``, keeping
+    the high watermark of ``watermark_col`` in its ``_layer.json`` (None
+    without one).
 
     Write-to-staging + atomic rename (Hadoop FileSystem API, so the same
-    code works on local FS and HDFS-compatible stores).
+    code works on local FS and HDFS-compatible stores). ``_layer.json``
+    is written into the staging directory before the swap.
 
     SINGLE-WRITER BY DESIGN (explicit non-goal, not an oversight): the
     reference's Postgres upsert serializes writers transactionally;
@@ -96,20 +319,23 @@ def upsert_parquet(
     write-time stats capture Delta gets from its txn log), so callers
     can never forget the refresh.
     """
-    fs, tpath, jvm = _hadoop_fs(spark, target_path)
-    current = spark.read.parquet(target_path) if fs.exists(tpath) else None
+    meta = layer_meta(spark, target_path)
+    current = read_layer(spark, target_path, meta) if meta else None
     merged = merge_last_writer_wins(current, batch, keys, order_col)
 
-    staging = target_path.rstrip("/") + ".__staging__"
-    writer = merged.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(staging)
+    staging = target_path.rstrip("/") + _STAGING
 
+    wm = _observed_write(
+        merged, watermark_col,
+        lambda d: d.write.mode("overwrite").parquet(staging),
+    )
+    _write_layer_meta(spark, staging, merged.schema, wm)
+
+    fs, tpath, _ = _hadoop_fs(spark, target_path)
     _, spath, _ = _hadoop_fs(spark, staging)
     if fs.exists(tpath):
         fs.delete(tpath, True)
-    fs.rename(spath, tpath)
+    _rename(fs, spath, tpath)
     if manifest_path is not None:
         from metar_pipeline_spark.sources.layout import (
             refresh_skipping_manifest,

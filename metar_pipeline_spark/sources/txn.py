@@ -55,8 +55,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from metar_pipeline_spark.sources.merge import (
+from metar_pipeline_spark.sources.merge import (  # noqa: F401 — re-exported
     _hadoop_fs,
+    _read_small_file,
+    _write_small_file,
     merge_last_writer_wins,
 )
 
@@ -84,24 +86,6 @@ class Commit:
     writer: str
     app_id: "str | None" = None  # idempotent-writer identity (optional)
     app_batch: "int | None" = None
-
-
-def _read_small_file(fs, path_obj, jvm) -> str:
-    stream = fs.open(path_obj)
-    try:
-        baos = jvm.java.io.ByteArrayOutputStream()
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 4096, False)
-        return bytes(baos.toByteArray()).decode("utf-8")
-    finally:
-        stream.close()
-
-
-def _write_small_file(fs, path_obj, data: str) -> None:
-    out = fs.create(path_obj, True)
-    try:
-        out.write(bytearray(data.encode("utf-8")))
-    finally:
-        out.close()
 
 
 class VersionedStore:

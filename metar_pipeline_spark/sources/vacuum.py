@@ -23,7 +23,10 @@ txn):
   renames) → RESTORE it immediately, regardless of age — vacuum
   repairs, it never widens a crash.
 - ``*.__staging__`` / ``*.__compact__`` staging dirs: dead iff older
-  than the horizon (a younger one may belong to an in-flight writer).
+  than the horizon (a younger one may belong to an in-flight writer),
+  except a complete merge staging dir whose live table is absent (a
+  swap that crashed between delete and rename): it is the only copy,
+  and is RESTORED, as ``merge.layer_meta`` does on the next write.
 - ``_data/<token>`` snapshot dirs in a versioned store (a ``_commits``
   sibling exists): dead iff referenced by NO commit file and older
   than the horizon (a younger unreferenced dir is a writer between
@@ -41,7 +44,7 @@ import json
 
 from pyspark.sql import SparkSession
 
-from metar_pipeline_spark.sources.merge import _hadoop_fs
+from metar_pipeline_spark.sources.merge import _hadoop_fs, is_complete_write
 
 _ASIDE = ".__old__"
 _STAGING_SUFFIXES = (".__staging__", ".__compact__")
@@ -206,7 +209,19 @@ def vacuum_store(
                     fs.rename(st.getPath(), live_h)
                     act("aside", st, "restored")
             elif name.endswith(_STAGING_SUFFIXES):
-                if is_old(st):
+                # a merge swap that crashed between its delete and its
+                # rename: the staging dir is the table's only copy
+                _, live_h, _ = _hadoop_fs(
+                    spark, f"{dir_path}/{name.rsplit('.__', 1)[0]}"
+                )
+                if (
+                    name.endswith(".__staging__")
+                    and not fs.exists(live_h)
+                    and is_complete_write(spark, fs, st.getPath().toString())
+                ):
+                    fs.rename(st.getPath(), live_h)
+                    act("staging", st, "restored")
+                elif is_old(st):
                     fs.delete(st.getPath(), True)
                     act("staging", st, "deleted")
                 else:

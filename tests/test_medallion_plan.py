@@ -305,3 +305,239 @@ def test_stg_anomaly_circuit_breaker(spark, tmp_path):
     assert r3["status"] == "merged"
     assert spark.read.parquet(base + "/stg").count() == n_before + 3
     assert _os.path.isdir(base + "/_quarantine_stg")
+
+
+# -- layer metadata: explicit schemas, stored watermarks, no Python workers
+
+
+LAYERS = ("stg", "ods", "int", "dwh")
+
+
+def _stored_watermarks(spark, base):
+    from metar_pipeline_spark.sources.merge import layer_meta
+
+    return {
+        layer: layer_meta(spark, f"{base}/{layer}").watermark
+        for layer in LAYERS
+    }
+
+
+def _table_watermarks(spark, base):
+    """Each layer's max(observed) in epoch micros; dwh's max(observed_date)
+    in days — what the reference's models read off their own target."""
+    out = {}
+    for layer in ("stg", "ods", "int"):
+        out[layer] = (
+            spark.read.parquet(f"{base}/{layer}")
+            .agg(F.unix_micros(F.max("observed")))
+            .first()[0]
+        )
+    out["dwh"] = (
+        spark.read.parquet(f"{base}/dwh")
+        .agg(F.unix_date(F.max("observed_date")))
+        .first()[0]
+    )
+    return out
+
+
+def test_warm_cycle_runs_at_most_12_jobs(spark, tmp_path):
+    """The four stage calls of a warm (third) cycle: no schema-inference
+    job, no watermark scan, no full rewrite of ods or dwh."""
+    import uuid
+
+    from metar_pipeline_spark.plans import medallion
+
+    base = str(tmp_path / "lake")
+    icaos = ["UUEE", "ULLI", "URSS"]
+    for day in (1, 2):
+        run_medallion(spark, _normalized(spark, _docs(icaos, day, -5.0)), base)
+    batch = _normalized(spark, _docs(icaos, 3, 1.0)).localCheckpoint()
+    sc = spark.sparkContext
+    group = f"warm-cycle-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "warm medallion cycle")
+    try:
+        medallion.stg_stage(spark, batch, base)
+        medallion.ods_stage(spark, base)
+        medallion.int_stage(spark, base)
+        medallion.dwh_stage(spark, base)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 12, len(jobs)
+
+
+def test_driver_local_frames_start_no_python_worker(spark):
+    """The bronze frame, the _metrics row and the schema snapshot are
+    JVM-local relations: their lineage holds no PythonRDD."""
+    from metar_pipeline_spark.plans.medallion import _batch_metrics_row
+    from metar_pipeline_spark.quality.schema_drift import snapshot_schema
+    from metar_pipeline_spark.sources.collector import raw_to_bronze
+
+    docs = [json.dumps(d) for d in _docs(["UUEE", "ULLI"], 1, -5.0)]
+    bronze = raw_to_bronze(spark, docs)
+    metrics = {
+        "max_observed_us": 1_706_770_800_000_000,
+        "max_observed_epoch": 1_706_770_800,
+        "min_observed_us": 1_706_767_200_000_000,
+        "n_rows": 2,
+        "null_icao": 0,
+        "null_observed": 0,
+    }
+    row = _batch_metrics_row(spark, "stg", metrics)
+    snap = snapshot_schema(bronze)
+    for df in (bronze, row, snap):
+        lineage = df._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, lineage
+    assert bronze.count() == 2
+    assert snap.count() == len(bronze.columns)
+    r = row.first()
+    assert (r.n_rows, r.max_observed_epoch) == (2, 1_706_770_800)
+
+
+def test_stored_watermarks_track_the_tables(spark, tmp_path):
+    """After three cycles each layer's _layer.json watermark equals the
+    table's own max; a batch wholly behind the watermark leaves every
+    watermark where it was."""
+    base = str(tmp_path / "lake")
+    icaos = ["UUEE", "ULLI", "URSS"]
+    run_medallion(spark, _normalized(spark, _docs(icaos, 1, -5.0)), base)
+    run_medallion(spark, _normalized(spark, _docs(icaos, 2, 3.0)), base)
+    after_two = _stored_watermarks(spark, base)
+    assert after_two == _table_watermarks(spark, base)
+    # a replay of day 1: every row lies behind the stg watermark
+    run_medallion(spark, _normalized(spark, _docs(icaos, 1, -5.0)), base)
+    assert _stored_watermarks(spark, base) == after_two
+    assert _table_watermarks(spark, base) == after_two
+
+
+def test_missing_layer_metadata_raises(spark, tmp_path):
+    """A layer directory without its _layer.json is never taken for a
+    first run: the stage that reads it raises."""
+    import os
+
+    from metar_pipeline_spark.plans import medallion
+
+    base = str(tmp_path / "lake")
+    batch = _normalized(spark, _docs(["UUEE", "ULLI"], 1, -5.0))
+    run_medallion(spark, batch, base)
+    stages = {
+        "stg": lambda: medallion.stg_stage(spark, batch, base),
+        "ods": lambda: medallion.ods_stage(spark, base),
+        "int": lambda: medallion.int_stage(spark, base),
+        "dwh": lambda: medallion.dwh_stage(spark, base),
+    }
+    for layer, stage in stages.items():
+        meta = os.path.join(base, layer, "_layer.json")
+        os.rename(meta, meta + ".aside")
+        with pytest.raises(FileNotFoundError, match="_layer.json"):
+            stage()
+        os.rename(meta + ".aside", meta)
+
+
+def test_metrics_instants_under_new_york_timezone(spark, tmp_path):
+    """_metrics keeps the batch's true instants when both the session and
+    the host run America/New_York: min/max_observed are the batch's
+    min/max(observed) and max_observed_epoch its unix_timestamp."""
+    import os
+    import time
+
+    from metar_pipeline_spark.plans.medallion import stg_stage
+
+    base = str(tmp_path / "lake")
+    prev_tz = os.environ.get("TZ")
+    prev_session = spark.conf.get("spark.sql.session.timeZone")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        batch = _normalized(
+            spark, _docs(["UUEE", "ULLI", "URSS"], 1, -5.0)
+        ).localCheckpoint()
+        stg_stage(spark, batch, base)
+        want = batch.agg(
+            F.unix_micros(F.min("observed")),
+            F.unix_micros(F.max("observed")),
+            F.unix_timestamp(F.max("observed")),
+        ).first()
+        got = (
+            spark.read.parquet(base + "/_metrics")
+            .agg(
+                F.unix_micros(F.first("min_observed")),
+                F.unix_micros(F.first("max_observed")),
+                F.first("max_observed_epoch"),
+            )
+            .first()
+        )
+        assert tuple(got) == tuple(want)
+        # docs observe 06:00-08:00 New York wall time on 2024-02-01 (EST)
+        assert want[2] == 1_706_785_200 + 2 * 3600
+    finally:
+        if prev_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = prev_tz
+        time.tzset()
+        spark.conf.set("spark.sql.session.timeZone", prev_session)
+
+
+def _layer_rows(spark, base, layer):
+    df = spark.read.parquet(f"{base}/{layer}")
+    df = df.drop("inserted_at")  # the collector's load time
+    return sorted(
+        (tuple(r) for r in df.select(sorted(df.columns)).collect()),
+        key=lambda t: tuple((v is None, str(v)) for v in t),
+    )
+
+
+def test_crashed_swap_recovers_from_staging(spark, tmp_path, monkeypatch):
+    """The table swap deletes the target, then renames staging into
+    place. A crash between the two leaves only the staging directory;
+    the retried cycle renames it into place and ends with the same
+    tables as a cycle that never crashed."""
+    import os
+    import shutil
+
+    from metar_pipeline_spark.sources import merge
+
+    icaos = ["UUEE", "ULLI", "URSS"]
+    batches = [(icaos, 1, -5.0), (icaos, 2, 3.0), (icaos[:2], 3, 1.0)]
+    clean = str(tmp_path / "clean")
+    for b in batches:
+        run_medallion(spark, _normalized(spark, _docs(*b)), clean)
+
+    crashed = str(tmp_path / "crashed")
+    for b in batches[:2]:
+        run_medallion(spark, _normalized(spark, _docs(*b)), crashed)
+    real_rename = merge._rename
+    calls = []
+
+    def rename_fails_once(fs, src, dst):
+        calls.append(str(dst))
+        if len(calls) == 1:
+            raise OSError("injected crash between delete and rename")
+        real_rename(fs, src, dst)
+
+    monkeypatch.setattr(merge, "_rename", rename_fails_once)
+    with pytest.raises(OSError, match="injected"):
+        run_medallion(spark, _normalized(spark, _docs(*batches[2])), crashed)
+    assert not os.path.exists(f"{crashed}/stg")
+    assert os.path.isdir(f"{crashed}/stg.__staging__")
+
+    # the retried cycle
+    run_medallion(spark, _normalized(spark, _docs(*batches[2])), crashed)
+    assert not os.path.exists(f"{crashed}/stg.__staging__")
+    for layer in LAYERS:
+        assert _layer_rows(spark, crashed, layer) == _layer_rows(
+            spark, clean, layer
+        ), layer
+    assert _stored_watermarks(spark, crashed) == _stored_watermarks(
+        spark, clean
+    )
+
+    # a staging leftover without _SUCCESS and _layer.json is no table
+    shutil.copytree(f"{crashed}/int", f"{crashed}/int.__staging__")
+    shutil.rmtree(f"{crashed}/int")
+    os.remove(f"{crashed}/int.__staging__/_SUCCESS")
+    with pytest.raises(RuntimeError, match="incomplete"):
+        run_medallion(spark, _normalized(spark, _docs(*batches[2])), crashed)

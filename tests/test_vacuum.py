@@ -69,6 +69,24 @@ def test_vacuum_removes_orphans_never_live_data(spark, tmp_path):
     assert not [r for r in again if r["action"] != "kept_young"]
 
 
+def test_vacuum_restores_a_stranded_merge_swap(spark, tmp_path):
+    """A merge swap that crashed after deleting its table leaves the
+    staging dir as the only copy: vacuum renames it into place."""
+    from metar_pipeline_spark.sources.merge import upsert_parquet
+
+    lake = str(tmp_path / "lake")
+    # a complete staged write (data, _SUCCESS, _layer.json) and no t
+    upsert_parquet(
+        spark, spark.range(3).withColumnRenamed("id", "k"),
+        f"{lake}/t.__staging__", keys=["k"], order_col="k",
+    )
+    report = vacuum_store(spark, lake, older_than_seconds=0)
+    assert [(r["kind"], r["action"]) for r in report] == [
+        ("staging", "restored")
+    ]
+    assert spark.read.parquet(f"{lake}/t").count() == 3
+
+
 def test_vacuum_horizon_protects_inflight_writers(spark, tmp_path):
     """A staging dir younger than the horizon is an in-flight write —
     vacuum must report it and leave it alone."""
